@@ -2,8 +2,6 @@ package perfbench
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
-
 /** Named metric values in print order. */
 final class Metrics {
   val values = mutable.LinkedHashMap[String, (Double, String)]()

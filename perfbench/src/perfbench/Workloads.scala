@@ -1,7 +1,5 @@
 package perfbench
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.SparkSession
 
 /** A registry workload over one half of the frozen partition.
