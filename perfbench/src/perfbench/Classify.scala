@@ -5,7 +5,7 @@ package perfbench
   * time is at least its action time is construct-bound. One warm-up
   * pass at `warmDir`, then one timed pass at `dir` classifies; then each
   * query runs twice back to back at the benchmark's sf0.01 and the
-  * second time is its `cost_s`, which cuts panels and sweep chunks. */
+  * second time is its `cost_s`, which cuts the timed slices. */
 object Classify {
   def main(args: Array[String]): Unit = {
     val Array(dir, warmDir) = args
@@ -36,7 +36,7 @@ object Classify {
       "registry_construct_bound" -> half(cb),
       "registry_execute_bound" -> half(eb),
       "cost_s_note" -> Json.str("per-query seconds (construct + plan + action + release) at " +
-        "sf0.01, the second of two back-to-back runs; used to cut panels and sweep chunks"),
+        "sf0.01, the second of two back-to-back runs; used to cut the timed slices"),
       "cost_s" -> Json.obj(cost.toSeq.sorted.map { case (k, v) => k -> Json.num(math.rint(v * 1e4) / 1e4) }),
       "classification_s" -> Json.obj(runs.sortBy(_.name).map(r => r.name -> Json.obj(Seq(
         "construct_s" -> s(r.constructNs), "plan_s" -> s(r.planNs), "action_s" -> s(r.actionNs)))))))

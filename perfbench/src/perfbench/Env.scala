@@ -14,8 +14,7 @@ object Env {
   val work: Path = root.resolve(".bench_build")
 
   /** Cores the run may use: `local[nproc]`, shuffle partitions = nproc. */
-  val cores: Int = sys.props.get("perfbench.cores").map(_.toInt)
-    .getOrElse(Runtime.getRuntime.availableProcessors())
+  val cores: Int = Runtime.getRuntime.availableProcessors()
 
   /** Fixture directory of a scale factor (`sf0.01`, ...). */
   def sf(name: String): String = dataDir.resolve(name).toString

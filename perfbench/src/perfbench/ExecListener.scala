@@ -5,8 +5,9 @@ import scala.collection.mutable
 import org.apache.spark.scheduler._
 
 /** One SparkListener that counts what the `exec` layer did: jobs,
-  * stages, tasks and their metrics. Jobs become spans under the span
-  * that was open when they were submitted, found through the
+  * stages, tasks and their metrics, per job. A stage's tasks count
+  * toward the job that first listed the stage. Jobs become spans under
+  * the span that was open when they were submitted, found through the
   * `perfbench.span` local property the benchmark sets on its own
   * threads, or through the PgServer connection's job group. */
 final class ExecListener extends SparkListener {
@@ -14,22 +15,16 @@ final class ExecListener extends SparkListener {
 
   private val lock = new Object
   private val jobs = mutable.LinkedHashMap[Int, Job]()
-  private var stages = 0L
-  private var tasks = 0L
-  private var taskRunMs = 0L
-  private var taskCpuNs = 0L
-  private var gcMs = 0L
-  private var shuffleWriteBytes = 0L
-  private var shuffleReadBytes = 0L
-  private var spillBytes = 0L
-  private var inputBytes = 0L
+  private val jobOfStage = mutable.Map[Int, Job]()
 
   override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
     val props = Option(e.properties)
     val span = props.flatMap(p => Option(p.getProperty(ExecListener.SpanProperty)))
       .map(_.toLong).getOrElse(0L)
     val group = props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-    jobs(e.jobId) = Job(e.jobId, e.time, -1L, span, group)
+    val j = new Job(e.jobId, e.time, span, group)
+    jobs(e.jobId) = j
+    e.stageIds.foreach(s => if (!jobOfStage.contains(s)) jobOfStage(s) = j)
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = lock.synchronized {
@@ -37,20 +32,22 @@ final class ExecListener extends SparkListener {
   }
 
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = lock.synchronized {
-    stages += 1
+    jobOfStage.get(e.stageInfo.stageId).foreach(_.stages += 1)
   }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = lock.synchronized {
-    tasks += 1
-    val m = e.taskMetrics
-    if (m != null) {
-      taskRunMs += m.executorRunTime
-      taskCpuNs += m.executorCpuTime
-      gcMs += m.jvmGCTime
-      shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
-      shuffleReadBytes += m.shuffleReadMetrics.totalBytesRead
-      spillBytes += m.diskBytesSpilled
-      inputBytes += m.inputMetrics.bytesRead
+    jobOfStage.get(e.stageId).foreach { j =>
+      j.tasks += 1
+      val m = e.taskMetrics
+      if (m != null) {
+        j.taskRunMs += m.executorRunTime
+        j.taskCpuNs += m.executorCpuTime
+        j.gcMs += m.jvmGCTime
+        j.shuffleWriteBytes += m.shuffleWriteMetrics.bytesWritten
+        j.shuffleReadBytes += m.shuffleReadMetrics.totalBytesRead
+        j.spillBytes += m.diskBytesSpilled
+        j.inputBytes += m.inputMetrics.bytesRead
+      }
     }
   }
 
@@ -65,21 +62,28 @@ final class ExecListener extends SparkListener {
     Thread.sleep(100) // trailing task/stage events of the last job
   }
 
-  /** Counter snapshot, for differences around a window. */
-  def snapshot: Map[String, Double] = lock.synchronized(Map(
-    "jobs" -> jobs.size.toDouble, "stages" -> stages.toDouble,
-    "tasks" -> tasks.toDouble, "task_run_s" -> taskRunMs / 1e3,
-    "task_cpu_s" -> taskCpuNs / 1e9, "gc_s" -> gcMs / 1e3,
-    "shuffle_write_mb" -> shuffleWriteBytes / 1e6,
-    "shuffle_read_mb" -> shuffleReadBytes / 1e6,
-    "spill_mb" -> spillBytes / 1e6, "input_mb" -> inputBytes / 1e6))
+  /** Counters summed over the jobs `ids`. */
+  def totals(ids: Set[Int]): Map[String, Double] = lock.synchronized {
+    val js = ids.toSeq.flatMap(jobs.get)
+    def sum(f: Job => Long) = js.map(f).sum.toDouble
+    Map("jobs" -> js.size.toDouble, "stages" -> sum(_.stages), "tasks" -> sum(_.tasks),
+      "task_run_s" -> sum(_.taskRunMs) / 1e3, "task_cpu_s" -> sum(_.taskCpuNs) / 1e9,
+      "gc_s" -> sum(_.gcMs) / 1e3,
+      "shuffle_write_mb" -> sum(_.shuffleWriteBytes) / 1e6,
+      "shuffle_read_mb" -> sum(_.shuffleReadBytes) / 1e6,
+      "spill_mb" -> sum(_.spillBytes) / 1e6, "input_mb" -> sum(_.inputBytes) / 1e6)
+  }
 }
 
 object ExecListener {
   val SpanProperty = "perfbench.span"
 
   /** A job; `span` is the benchmark span that submitted it (0 if none),
-    * `group` its job group. Times are epoch milliseconds. */
-  final case class Job(id: Int, startMs: Long, var endMs: Long, span: Long,
-      group: String)
+    * `group` its job group. Times are epoch milliseconds; the counters
+    * are those of its stages and tasks. */
+  final class Job(val id: Int, val startMs: Long, val span: Long, val group: String) {
+    var endMs = -1L
+    var stages, tasks, taskRunMs, taskCpuNs, gcMs = 0L
+    var shuffleWriteBytes, shuffleReadBytes, spillBytes, inputBytes = 0L
+  }
 }

@@ -5,17 +5,15 @@ import scala.collection.mutable
 /** Writes `perfbench/golden.json`: the fingerprint of every registered
   * query at sf0.01 (`registry`) and of every wire statement, template x
   * parameter pool entry (`wire`). Each answer is computed twice and must
-  * agree, so only reproducible answers become goldens. Naming one
-  * section regenerates only it. The wire section is computed on a fresh
-  * session, in the state the wire workloads serve from. */
+  * agree, so only reproducible answers become goldens. The wire section
+  * is computed first, on a fresh session, in the state the wire
+  * workloads serve from. */
 object Golden {
-  def main(args: Array[String]): Unit = {
-    val sections = if (args.isEmpty) Seq("wire", "registry") else args.toSeq
-    val old = if (java.nio.file.Files.exists(Frozen.goldenPath)) Some(Frozen.golden) else None
+  def main(): Unit = {
     val spark = Env.session("golden")
     val unstable = mutable.Buffer[String]()
 
-    val wire = if (!sections.contains("wire")) old.get.wire.toSeq else {
+    val wire = {
       val host = new WireHost(spark)
       try {
         val runner = new WireRunner(Map.empty)
@@ -38,15 +36,14 @@ object Golden {
     }
 
     val off = new Trace(false)
-    val registry = if (!sections.contains("registry")) old.get.registry.toSeq else
-      Registry.all.map { q =>
-        val a = Registry.run(spark, q, Env.sf("sf0.01"), off)
-        val b = Registry.run(spark, q, Env.sf("sf0.01"), off)
-        require(a.error.isEmpty, s"${q.name} failed: ${a.error.get}")
-        if (a.fp != b.fp) unstable += q.name
-        System.err.println(s"[golden] ${q.name} ${a.fp.show}")
-        q.name -> a.fp.show
-      }
+    val registry = Registry.all.map { q =>
+      val a = Registry.run(spark, q, Env.sf("sf0.01"), off)
+      val b = Registry.run(spark, q, Env.sf("sf0.01"), off)
+      require(a.error.isEmpty, s"${q.name} failed: ${a.error.get}")
+      if (a.fp != b.fp) unstable += q.name
+      System.err.println(s"[golden] ${q.name} ${a.fp.show}")
+      q.name -> a.fp.show
+    }
 
     require(unstable.isEmpty, s"answers differ between two runs: ${unstable.mkString(", ")}")
     def section(kv: Seq[(String, String)]) =

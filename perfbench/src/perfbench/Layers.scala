@@ -5,8 +5,7 @@ import scala.collection.mutable
 /** Per-layer metrics of a traced run, named by the engine module each
   * layer belongs to. The traced workload pass and the fixed layer probe
   * are pooled, so every metric is measured on every workload. */
-final class Layers(trace: Trace, listener: ExecListener, before: Map[String, Double],
-    after: Map[String, Double], cores: Int) {
+final class Layers(trace: Trace, listener: ExecListener, cores: Int) {
   private val regRuns = mutable.Buffer[QueryRun]()
   private val ops = mutable.Buffer[WireOp]()
   private val conns = mutable.Buffer[Connect]()
@@ -23,17 +22,22 @@ final class Layers(trace: Trace, listener: ExecListener, before: Map[String, Dou
 
   private def med(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else Stats.median(xs)
 
-  /** Job spans under the span that submitted them: the benchmark's own
-    * span (local property) or, for PgServer connections, the traced
-    * statement phase of that connection that was open at job start. */
-  private def jobSpans(): Seq[Span] = {
+  /** The jobs of the traced pass and the probe, each with its span
+    * under the span that submitted it: the benchmark's own span (local
+    * property) or, for PgServer connections, the traced statement phase
+    * of that connection that was open at job start. A connection no
+    * traced client opened is a `postgres_scan` loop-back; its jobs hang
+    * under whichever traced statement was open. Jobs under no span (the
+    * untraced passes, the probe's direct calls and calibration, the
+    * in-process twins) are left out. */
+  private def jobSpans(): Seq[(ExecListener.Job, Span)] = {
     val all = trace.all
     val byId = all.map(s => s.id -> s).toMap
-    val stmtByPid: Map[Int, Seq[(WireOp, Span)]] = {
-      val roots = all.filter(_.layer == "statement")
-      val rootByKey = roots.map(s => (s.startNs, s.endNs) -> s).toMap
-      ops.flatMap(o => rootByKey.get((o.startNs, o.endNs)).map(o -> _)).toSeq.groupBy(_._1.pid)
+    val stmts: Seq[(Int, Span)] = {
+      val rootByKey = all.filter(_.layer == "statement").map(s => (s.startNs, s.endNs) -> s).toMap
+      ops.flatMap(o => rootByKey.get((o.startNs, o.endNs)).map(o.pid -> _)).toSeq
     }
+    val stmtByPid = stmts.groupBy(_._1)
     val kids = all.groupBy(_.parent)
     listener.jobList.flatMap { j =>
       if (j.endMs < 0) None
@@ -44,13 +48,13 @@ final class Layers(trace: Trace, listener: ExecListener, before: Map[String, Dou
           if (j.span != 0L) byId.get(j.span)
           else if (j.group.startsWith("pg-conn-")) {
             val pid = j.group.stripPrefix("pg-conn-").toInt
-            stmtByPid.getOrElse(pid, Nil).collectFirst {
+            stmtByPid.getOrElse(pid, stmts).collectFirst {
               case (_, root) if s >= root.startNs && s <= root.endNs =>
                 kids.getOrElse(root.id, Nil).find(c => s >= c.startNs && s <= c.endNs).getOrElse(root)
             }
           } else None
         parent.map { p =>
-          Span(trace.nextId(), p.id, p.op, "jobs", s"job ${j.id}",
+          j -> Span(trace.nextId(), p.id, p.op, "jobs", s"job ${j.id}",
             math.max(s, p.startNs), math.max(math.max(s, p.startNs), math.min(e, p.endNs)))
         }
       }
@@ -58,7 +62,8 @@ final class Layers(trace: Trace, listener: ExecListener, before: Map[String, Dou
   }
 
   def finish(out: Metrics, overheadFrac: Double, window: Seq[Seq[Span]]): Unit = {
-    val jobs = jobSpans()
+    val attributed = jobSpans()
+    val jobs = attributed.map(_._2)
     val spans = trace.all ++ jobs
     val spanLayer = spans.map(s => s.id -> s.layer).toMap
     def s(v: Long) = v / 1e9
@@ -77,15 +82,16 @@ final class Layers(trace: Trace, listener: ExecListener, before: Map[String, Dou
     Seq("exchanges", "broadcasts", "sorts", "windows", "cartesians").foreach { c =>
       out.put(s"plans.$c", regRuns.map(_.planCounts.getOrElse(c, 0)).sum.toDouble, "count")
     }
-    // exec: the action and what the SparkListener saw during the traced window
-    def d(k: String) = after(k) - before.getOrElse(k, 0.0)
-    val actionS = s(regRuns.map(_.actionNs).sum)
-    out.put("exec.action_s", actionS, "s")
-    Seq("jobs", "stages", "tasks").foreach(k => out.put(s"exec.$k", d(k), "count"))
-    Seq("task_run_s", "task_cpu_s", "gc_s").foreach(k => out.put(s"exec.$k", d(k), "s"))
-    val jobWallS = Trace.covered(jobs.map(j => (j.startNs, j.endNs)), Long.MinValue, Long.MaxValue) / 1e9
-    out.put("exec.core_busy_frac", if (jobWallS > 0) d("task_run_s") / (jobWallS * cores) else 0.0, "frac")
-    Seq("shuffle_write_mb", "shuffle_read_mb", "spill_mb", "input_mb").foreach(k => out.put(s"exec.$k", d(k), "MB"))
+    // exec: the action, and what the SparkListener saw of the attributed jobs
+    out.put("exec.action_s", s(regRuns.map(_.actionNs).sum), "s")
+    val t = listener.totals(attributed.map(_._1.id).toSet)
+    Seq("jobs", "stages", "tasks").foreach(k => out.put(s"exec.$k", t(k), "count"))
+    Seq("task_run_s", "task_cpu_s", "gc_s").foreach(k => out.put(s"exec.$k", t(k), "s"))
+    // task time over the wall time those same jobs ran, unclipped
+    val jobWallS = Trace.covered(attributed.map { case (j, _) => (j.startMs, j.endMs) },
+      Long.MinValue, Long.MaxValue) / 1e3
+    out.put("exec.core_busy_frac", if (jobWallS > 0) t("task_run_s") / (jobWallS * cores) else 0.0, "frac")
+    Seq("shuffle_write_mb", "shuffle_read_mb", "spill_mb", "input_mb").foreach(k => out.put(s"exec.$k", t(k), "MB"))
     Registry.modules.foreach { case (m, _) =>
       out.put(s"exec.$m.action_s", s(regRuns.filter(_.module == m).map(_.actionNs).sum), "s")
     }

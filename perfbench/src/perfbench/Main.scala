@@ -3,7 +3,7 @@ package perfbench
 /** Command-line entry of the benchmark JVM (see `perfbench/README.md`):
   * - `run --workload W --seed N --seconds S --trace 0|1`: one run;
   * - `selftest`: the benchmark's own arithmetic;
-  * - `golden [path]`: regenerate the golden fingerprints;
+  * - `golden`: regenerate the golden fingerprints;
   * - `classify <sf dir> <warm-up dir>`: re-derive the registry
   *   partition. */
 object Main {
@@ -11,7 +11,7 @@ object Main {
     val code = try args.headOption match {
       case Some("run") => Run.run(args.toSeq.tail)
       case Some("selftest") => SelfTest.run()
-      case Some("golden") => Golden.main(args.tail); 0
+      case Some("golden") => Golden.main(); 0
       case Some("classify") => Classify.main(args.tail); 0
       case _ =>
         System.err.println("usage: perfbench.Main run|selftest|golden|classify ...")

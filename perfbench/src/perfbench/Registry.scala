@@ -107,8 +107,9 @@ object Registry {
 
   /** How much slower a query runs in a benchmark JVM, a minute old, than
     * the frozen per-query costs, which were measured in a long-lived
-    * one. A registry panel is cut at `--seconds / FreshJvmFactor` of
-    * frozen cost so its measured pass takes about `--seconds`. */
+    * one. A registry workload times two slices of `--seconds / 2 /
+    * FreshJvmFactor` of frozen cost each, so its measured pass takes
+    * about `--seconds`. */
   val FreshJvmFactor = 2.0
 
   /** Cut `names` into slices of about `target` seconds each at the

@@ -11,9 +11,11 @@ final class Metrics {
   })
 }
 
-/** What one measured pass produced, before it becomes metrics. */
+/** What one measured pass produced, before it becomes metrics. `rows`
+  * and `bytes` were moved in `rateNs`, which is the whole pass on the
+  * wire and the panel's share of it on the registry. */
 final case class Pass(wallNs: Long, opNames: Seq[String], opNs: Seq[Long], rows: Long,
-    bytes: Long, attempted: Int, failures: Seq[String])
+    bytes: Long, rateNs: Long, attempted: Int, failures: Seq[String])
 
 /** One invocation: `--workload W --seed N --seconds S --trace 0|1`. */
 object Run {
@@ -24,10 +26,10 @@ object Run {
 
   def parse(args: Seq[String]): Args = {
     val kv = args.grouped(2).collect { case Seq(k, v) if k.startsWith("--") => k.drop(2) -> v }.toMap
-    val w = kv.getOrElse("workload", sys.error("--workload is required"))
+    def arg(k: String) = kv.getOrElse(k, sys.error(s"--$k is required"))
+    val w = arg("workload")
     require(workloads.contains(w), s"unknown workload '$w' (one of ${workloads.mkString(", ")})")
-    Args(w, kv.getOrElse("seed", "1").toLong, kv.getOrElse("seconds", "10").toDouble,
-      kv.getOrElse("trace", "0") == "1")
+    Args(w, arg("seed").toLong, arg("seconds").toDouble, arg("trace") == "1")
   }
 
   def log(msg: String): Unit = System.err.println(s"[perfbench] $msg")
@@ -66,16 +68,15 @@ object Run {
         metrics.put("setup_s", setupS, "s")
         metrics.put("peak_rss_mb", rssMb, "MB")
         // latency percentiles go to the summary line only: a registry
-        // panel has too few operations for any of them to have ten
+        // pass has too few operations for any of them to have ten
         // samples beyond it, so throughput is the end-to-end timing
-        val wallS = plain.wallNs / 1e9
-        metrics.put("ops_per_s", plain.opNs.size / wallS, "1/s")
-        metrics.put("rows_per_s", plain.rows / wallS, "1/s")
-        metrics.put("mb_per_s", plain.bytes / 1e6 / wallS, "MB/s")
+        metrics.put("ops_per_s", plain.opNs.size / (plain.wallNs / 1e9), "1/s")
+        val rateS = plain.rateNs / 1e9
+        metrics.put("rows_per_s", plain.rows / rateS, "1/s")
+        metrics.put("mb_per_s", plain.bytes / 1e6 / rateS, "MB/s")
         summary(a, plain)
       } else {
         val trace = new Trace(true)
-        val before = listener.snapshot
         val traced = w.measure(traced = Some(trace))
         failures ++= traced.failures
         attempted += traced.attempted
@@ -83,7 +84,7 @@ object Run {
         probe.run()
         failures ++= probe.failures
         listener.settle()
-        val layers = new Layers(trace, listener, before, listener.snapshot, Env.cores)
+        val layers = new Layers(trace, listener, Env.cores)
         w.layerMetrics(layers)
         probe.layerMetrics(layers)
         // untraced again, so the traced pass sits between two untraced
@@ -97,9 +98,6 @@ object Run {
           window = w.lanes ++ probe.lanes)
         trace.write(Env.work.resolve("trace").resolve(s"${a.workload}-${a.seed}.jsonl"))
       }
-      val (swept, sweepFailures) = w.sweep()
-      attempted += swept
-      failures ++= sweepFailures
       failures.take(20).foreach(f => log(s"WRONG: $f"))
       val correct = failures.isEmpty
       println(Json.obj(Seq("correct" -> correct.toString, "attempted" -> attempted.toString,
@@ -129,9 +127,6 @@ trait Workload {
   def warmUp(): Unit
   /** One measured pass; traced when a recorder is given. */
   def measure(traced: Option[Trace]): Pass
-  /** Untimed correctness work after the measurement: (attempted,
-    * failures). */
-  def sweep(): (Int, Seq[String]) = (0, Nil)
   /** Per-layer metrics of the traced pass. */
   def layerMetrics(l: Layers): Unit
   /** The traced pass's lanes (one per client or caller): root spans

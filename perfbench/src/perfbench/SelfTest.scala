@@ -142,5 +142,11 @@ object SelfTest {
       val c = sl.map(_.map(cost).sum)
       sl.size > 1 && c.max / c.min < 1.25
     }
+    check("every run times the panel; a set of seeds times every query") {
+      val picks = (0L until 40L).map(s => RegistryWorkload.pick(names, cost, 16.0, s))
+      val panel = picks.head._1
+      picks.forall(_._1 == panel) && picks.forall(p => p._2.nonEmpty && p._2.intersect(panel).isEmpty) &&
+        picks.flatMap(p => p._1 ++ p._2).distinct.sorted == names.sorted
+    }
   }
 }

@@ -79,10 +79,4 @@ object Trace {
       s.id -> (s.durNs - covered(ch, s.startNs, s.endNs))
     }.toMap
   }
-
-  /** Self time summed per layer, in seconds. */
-  def selfByLayer(spans: Seq[Span]): Map[String, Double] = {
-    val self = selfTimes(spans)
-    spans.groupBy(_.layer).map { case (l, ss) => l -> ss.map(s => self(s.id)).sum / 1e9 }
-  }
 }

@@ -4,21 +4,23 @@ import org.apache.spark.sql.SparkSession
 
 /** A registry workload over one half of the frozen partition.
   *
-  * Timed: a fixed panel, one query from each cost band of the half
-  * (about `--seconds` of work), run back to back by one caller in seeded
-  * order after the panel warmed up. Checked, not timed: after the
-  * measurement, a seeded chunk of the half (about 1/24 of it) is swept
-  * for correctness on min(4, nproc) threads, so over a set of seeds
-  * every query's answer is checked against its golden. */
+  * The half is cut into slices of equal frozen cost, each with one
+  * query from each cost band. Timed: the first slice, a fixed panel, and
+  * then one of the others that the seed picks, about `--seconds` of work
+  * together, each in seeded order, run back to back by one caller after
+  * both warmed up. Every timed answer is checked against its golden.
+  * Over a set of seeds every query of the half is timed and checked; the
+  * panel, the same in every run and run before the slice so the slice
+  * does not leave garbage or cache state behind in it, gives the row and
+  * byte rates, which would otherwise depend on which slice ran. */
 final class RegistryWorkload(spark: SparkSession, names: Seq[String],
     part: Frozen.Partition, golden: Frozen.Golden, a: Run.Args) extends Workload {
   private val byName = Registry.all.map(q => q.name -> q).toMap
-  private def cost(n: String) = part.costS.getOrElse(n, 1.0)
-  val panel: Seq[String] = new scala.util.Random(a.seed).shuffle(
-    Registry.slices(names, cost, a.seconds / Registry.FreshJvmFactor).head)
-  val chunk: Seq[String] = {
-    val all = Registry.slices(names, cost, names.map(cost).sum / RegistryWorkload.SweepChunks)
-    all(Math.floorMod(a.seed, all.size.toLong).toInt)
+  private val (panel, slice) =
+    RegistryWorkload.pick(names, n => part.costS.getOrElse(n, 1.0), a.seconds, a.seed)
+  private val timed = {
+    val rng = new scala.util.Random(a.seed)
+    rng.shuffle(panel) ++ rng.shuffle(slice)
   }
   private var tracedRuns = Seq.empty[QueryRun]
   private var tracedLane = Seq.empty[Span]
@@ -58,27 +60,23 @@ final class RegistryWorkload(spark: SparkSession, names: Seq[String],
     out.asScala.toSeq
   }
 
-  /** The panel once, unmeasured: the first run of a plan pays code
-    * generation, JIT and file-listing caches, which the JVM shares with
-    * the measured pass. */
-  def warmUp(): Unit = concurrently(panel)
+  /** The timed queries once, unmeasured: the first run of a plan pays
+    * code generation, JIT and file-listing caches, which the JVM shares
+    * with the measured pass. */
+  def warmUp(): Unit = concurrently(timed)
 
   def measure(traced: Option[Trace]): Pass = {
     val trace = traced.getOrElse(new Trace(false))
     val t0 = System.nanoTime()
-    val runs = panel.map(n => Registry.run(spark, byName(n), Env.sf("sf0.01"), trace))
+    val runs = timed.map(n => Registry.run(spark, byName(n), Env.sf("sf0.01"), trace))
     val wall = System.nanoTime() - t0
     if (traced.nonEmpty) {
       tracedRuns = runs
       tracedLane = trace.all.filter(s => s.layer == "query" && s.parent == 0L)
     }
-    Pass(wall, runs.map(_.name), runs.map(_.totalNs), runs.map(_.fp.rows).sum, runs.map(_.bytes).sum,
-      runs.size, runs.flatMap(verdict))
-  }
-
-  override def sweep(): (Int, Seq[String]) = {
-    val runs = concurrently(chunk)
-    (runs.size, runs.flatMap(verdict))
+    val onPanel = runs.filter(r => panel.contains(r.name))
+    Pass(wall, runs.map(_.name), runs.map(_.totalNs), onPanel.map(_.fp.rows).sum, onPanel.map(_.bytes).sum,
+      onPanel.map(_.totalNs).sum, runs.size, runs.flatMap(verdict))
   }
 
   def layerMetrics(l: Layers): Unit = l.registry(tracedRuns)
@@ -86,8 +84,13 @@ final class RegistryWorkload(spark: SparkSession, names: Seq[String],
 }
 
 object RegistryWorkload {
-  /** The correctness sweep covers the half in this many seeded chunks. */
-  val SweepChunks = 24
+  /** The fixed panel and the seed's slice of `names`, each about
+    * `seconds / 2 / FreshJvmFactor` of frozen cost. */
+  def pick(names: Seq[String], cost: String => Double, seconds: Double,
+      seed: Long): (Seq[String], Seq[String]) = {
+    val all = Registry.slices(names, cost, seconds / 2 / Registry.FreshJvmFactor)
+    (all.head, if (all.size < 2) Nil else all(1 + Math.floorMod(seed, all.size - 1L).toInt))
+  }
 }
 
 /** A wire workload: a PgServer on the host session and closed-loop
@@ -151,7 +154,7 @@ final class WireWorkload(spark: SparkSession, interactive: Boolean,
       twinNs = Twin.measure(spark, ops)
     }
     Pass(wall, ops.map(_.stmt.key), ops.map(_.ns), ops.map(Wire.rowsMoved).sum, ops.map(_.res.bytes).sum,
-      ops.size, ops.filterNot(_.ok).map(o => s"${o.stmt.key}: ${o.why}"))
+      wall, ops.size, ops.filterNot(_.ok).map(o => s"${o.stmt.key}: ${o.why}"))
   }
 
   def layerMetrics(l: Layers): Unit = l.wire(tracedOps, tracedConns, twinNs)
