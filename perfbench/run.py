@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one perfbench workload against the engine in this checkout.
 
-    python3 perfbench/run.py --workload registry_execute_bound --seed 1 --seconds 16 --trace 0
+    python3 perfbench/run.py --workload registry_execute_bound --seed 1 --seconds 20 --trace 0
 
 The first call builds the engine and the benchmark from source with sbt
 (offline) and caches the classpath in .bench_build/; later calls reuse
@@ -150,7 +150,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload")
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=16)
+    ap.add_argument("--seconds", type=float, default=20)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--selftest", action="store_true")
     ap.add_argument("--golden", action="store_true", help="regenerate golden.json")

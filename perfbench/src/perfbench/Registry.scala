@@ -105,12 +105,9 @@ object Registry {
     QueryRun(q.name, module, c, p, a, r, fp, bytes, err, phases, counts, leaked)
   }
 
-  /** How much slower a query runs in a benchmark JVM, a minute old, than
-    * the frozen per-query costs, which were measured in a long-lived
-    * one. A registry workload times two slices of `--seconds / 2 /
-    * FreshJvmFactor` of frozen cost each, so its measured pass takes
-    * about `--seconds`. */
-  val FreshJvmFactor = 2.0
+  /** Frozen seconds of work per slice: the 213 execute-bound queries
+    * make 50 slices of 4 or 5 queries. */
+  val SliceCostS = 2.45
 
   /** Cut `names` into slices of about `target` seconds each at the
     * frozen per-query costs. Queries are dealt in cost order, snaking

@@ -11,11 +11,17 @@ final class Metrics {
   })
 }
 
-/** What one measured pass produced, before it becomes metrics. `rows`
-  * and `bytes` were moved in `rateNs`, which is the whole pass on the
-  * wire and the panel's share of it on the registry. */
-final case class Pass(wallNs: Long, opNames: Seq[String], opNs: Seq[Long], rows: Long,
-    bytes: Long, rateNs: Long, attempted: Int, failures: Seq[String])
+/** One timed operation: a registry query or a wire statement. `key`
+  * names what ran, the same in every round (a wire statement's template,
+  * without its parameter pool entry). */
+final case class Op(key: String, ns: Long, rows: Long, bytes: Long)
+
+/** What one measured pass produced, before it becomes metrics: the
+  * timed operations, and the ones `swept` after them, which are
+  * checked and listed but make no metric. */
+final case class Pass(wallNs: Long, ops: Seq[Op], failures: Seq[String], swept: Seq[Op] = Nil) {
+  def attempted: Int = ops.size + swept.size
+}
 
 /** One invocation: `--workload W --seed N --seconds S --trace 0|1`. */
 object Run {
@@ -57,8 +63,11 @@ object Run {
       }
       log(f"session ready at ${Env.sinceJvmStartS}%.2f s")
       w.warmUp()
-      val setupS = Env.sinceJvmStartS
-      log(f"setup done in $setupS%.2f s")
+      val setupS = Stats.median((1 to SetUps).map { _ =>
+        val t0 = System.nanoTime(); w.setUp(); (System.nanoTime() - t0) / 1e9
+      })
+      val startupS = Env.sinceJvmStartS
+      log(f"set-up $setupS%.3f s (median of $SetUps); first timed operation at $startupS%.2f s")
       val plain = w.measure(traced = None)
       val rssMb = Env.peakRssMb
       val metrics = new Metrics
@@ -67,14 +76,11 @@ object Run {
       if (!a.trace) {
         metrics.put("setup_s", setupS, "s")
         metrics.put("peak_rss_mb", rssMb, "MB")
-        // latency percentiles go to the summary line only: a registry
-        // pass has too few operations for any of them to have ten
-        // samples beyond it, so throughput is the end-to-end timing
-        metrics.put("ops_per_s", plain.opNs.size / (plain.wallNs / 1e9), "1/s")
-        val rateS = plain.rateNs / 1e9
-        metrics.put("rows_per_s", plain.rows / rateS, "1/s")
-        metrics.put("mb_per_s", plain.bytes / 1e6 / rateS, "MB/s")
-        summary(a, plain)
+        val r = Stats.Rates(plain.ops)
+        metrics.put("ops_per_s", r.opsPerS, "1/s")
+        metrics.put("rows_per_s", r.rowsPerS, "1/s")
+        metrics.put("mb_per_s", r.bytesPerS / 1e6, "MB/s")
+        summary(a, plain, startupS)
       } else {
         val trace = new Trace(true)
         val traced = w.measure(traced = Some(trace))
@@ -87,14 +93,11 @@ object Run {
         val layers = new Layers(trace, listener, Env.cores)
         w.layerMetrics(layers)
         probe.layerMetrics(layers)
-        // untraced again, so the traced pass sits between two untraced
-        // ones and warming up along the run does not read as overhead
-        val plain2 = w.measure(traced = None)
-        failures ++= plain2.failures
-        attempted += plain2.attempted
-        def perOp(p: Pass) = p.wallNs.toDouble / p.opNs.size
+        // queries still get faster along a run, so the traced pass is
+        // compared with as many of the latest untraced operations
+        def perOp(ops: Seq[Op]) = ops.map(_.ns).sum.toDouble / ops.size
         layers.finish(metrics,
-          overheadFrac = perOp(traced) / ((perOp(plain) + perOp(plain2)) / 2) - 1,
+          overheadFrac = perOp(traced.ops) / perOp(plain.ops.takeRight(traced.ops.size)) - 1,
           window = w.lanes ++ probe.lanes)
         trace.write(Env.work.resolve("trace").resolve(s"${a.workload}-${a.seed}.jsonl"))
       }
@@ -109,21 +112,32 @@ object Run {
     }
   }
 
-  private def summary(a: Args, p: Pass): Unit = {
-    val ms = p.opNs.map(_ / 1e6)
+  /** How many times a run sets up, for the median `setup_s`. */
+  val SetUps = 3
+
+  private def opList(ops: Seq[Op]): String =
+    ops.map(o => s"[${Json.str(o.key)},${Json.num(math.rint(o.ns / 1e6))}]").mkString("[", ",", "]")
+
+  private def summary(a: Args, p: Pass, startupS: Double): Unit = {
+    val ms = p.ops.map(_.ns / 1e6)
     val tail = Stats.tailPercentile(ms.size).filter(_ > 0.5)
     val parts = Seq("workload" -> Json.str(a.workload), "seed" -> a.seed.toString,
-      "ops" -> ms.size.toString, "wall_s" -> Json.num(p.wallNs / 1e9),
+      "startup_s" -> Json.num(startupS), "ops" -> ms.size.toString, "wall_s" -> Json.num(p.wallNs / 1e9),
       "op_p50_ms" -> Json.num(Stats.median(ms))) ++
       tail.map(t => s"op_${Stats.label(t)}_ms" -> Json.num(Stats.percentile(ms, t))) :+
-      ("op_ms" -> p.opNames.zip(ms).map { case (n, v) => s"[${Json.str(n)},${Json.num(math.rint(v))}]" }
-        .mkString("[", ",", "]"))
+      ("op_ms" -> opList(p.ops)) :+ ("swept_ms" -> opList(p.swept))
     println(Json.obj(parts))
   }
 }
 
-/** A workload: warm-up (part of set-up), then measured passes. */
+/** A workload: set-up and warm-up, then measured passes. */
 trait Workload {
+  /** What a caller does before its first operation, done afresh; timed
+    * several times per run for `setup_s`. */
+  def setUp(): Unit
+  /** The timed operations, unmeasured: the first runs of a plan pay
+    * code generation, JIT and file-listing caches, which the JVM shares
+    * with the measured passes. */
   def warmUp(): Unit
   /** One measured pass; traced when a recorder is given. */
   def measure(traced: Option[Trace]): Pass

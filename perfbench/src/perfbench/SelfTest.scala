@@ -17,7 +17,7 @@ object SelfTest {
     else { failed += 1; System.err.println(s"[selftest] FAIL: $what") }
 
   def run(): Int = {
-    percentiles(); selfTime(); fingerprint(); goldens(); slicing()
+    percentiles(); selfTime(); fingerprint(); goldens(); slicing(); rates()
     System.err.println(s"[selftest] $passed passed, $failed failed")
     if (failed == 0) 0 else 1
   }
@@ -142,11 +142,32 @@ object SelfTest {
       val c = sl.map(_.map(cost).sum)
       sl.size > 1 && c.max / c.min < 1.25
     }
-    check("every run times the panel; a set of seeds times every query") {
-      val picks = (0L until 40L).map(s => RegistryWorkload.pick(names, cost, 16.0, s))
+    check("every run times the same panel; a set of seeds sweeps every other query") {
+      val picks = (0L until 100L).map(s => RegistryWorkload.pick(names, cost, s))
       val panel = picks.head._1
       picks.forall(_._1 == panel) && picks.forall(p => p._2.nonEmpty && p._2.intersect(panel).isEmpty) &&
         picks.flatMap(p => p._1 ++ p._2).distinct.sorted == names.sorted
+    }
+    check("the panel is the two slices of middle frozen cost") {
+      val panel = RegistryWorkload.pick(names, cost, 0)._1
+      val byCost = Registry.slices(names, cost, Registry.SliceCostS).sortBy(_.map(cost).sum)
+      panel.sorted == (byCost(byCost.size / 2 - 1) ++ byCost(byCost.size / 2)).sorted
+    }
+    check("the measured round count follows --seconds, at least two") {
+      RegistryWorkload.rounds(20) == 3 && RegistryWorkload.rounds(1) == 2 && RegistryWorkload.rounds(42) == 6
+    }
+  }
+
+  private def rates(): Unit = {
+    def op(k: String, ms: Double, rows: Long) = Op(k, (ms * 1e6).toLong, rows, rows * 10)
+    val steady = Seq(op("a", 100, 5), op("b", 300, 1), op("a", 100, 5), op("b", 300, 1))
+    check("rates of a steady pass are plain ratios") {
+      val r = Stats.Rates(steady)
+      math.abs(r.opsPerS - 5.0) < 1e-9 && math.abs(r.rowsPerS - 15.0) < 1e-9 && math.abs(r.bytesPerS - 150.0) < 1e-9
+    }
+    check("one slow operation does not move the rates") {
+      val r = Stats.Rates(steady ++ Seq(op("a", 100, 5), op("a", 5000, 5)))
+      math.abs(r.opsPerS - 6 / 1.0) < 1e-9 && math.abs(r.rowsPerS - 22.0) < 1e-9
     }
   }
 }

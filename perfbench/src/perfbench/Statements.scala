@@ -16,7 +16,10 @@ object Kind {
   * `key` names the golden fingerprint that checks its result; `cls` is
   * the traffic class it is reported under. */
 final case class Stmt(key: String, cls: String, kind: Kind, sql: String,
-    params: Seq[String] = Nil)
+    params: Seq[String] = Nil) {
+  /** The key without its parameter pool entry (`lk.order#3` -> `lk.order`). */
+  def template: String = key.takeWhile(_ != '#')
+}
 
 /** The statement templates of the two wire workloads and their
   * parameter pools. Parameters come from fixed pools so each

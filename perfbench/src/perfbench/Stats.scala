@@ -40,4 +40,21 @@ object Stats {
     val s = BigDecimal(p * 100).bigDecimal.stripTrailingZeros.toPlainString
     s"p$s"
   }
+
+  /** Rates of a measured pass that one slow moment does not move: each
+    * operation counts with the median time, rows and bytes of all the
+    * operations of its key, so a key that ran R times weighs R times its
+    * median. */
+  final case class Rates(ops: Seq[Op]) {
+    private val typical: Seq[(Double, Double, Double)] = {
+      val med = ops.groupBy(_.key).map { case (k, os) =>
+        k -> ((median(os.map(_.ns.toDouble)), median(os.map(_.rows.toDouble)), median(os.map(_.bytes.toDouble))))
+      }
+      ops.map(o => med(o.key))
+    }
+    private val seconds = typical.map(_._1).sum / 1e9
+    val opsPerS: Double = ops.size / seconds
+    val rowsPerS: Double = typical.map(_._2).sum / seconds
+    val bytesPerS: Double = typical.map(_._3).sum / seconds
+  }
 }

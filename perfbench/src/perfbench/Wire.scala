@@ -74,12 +74,17 @@ final class WireRunner(golden: Map[String, String]) {
 }
 
 /** Hands out statements round by round: a round is refilled only while
-  * the deadline has not passed, so a run always ends on whole rounds and
-  * every run does the same mix of work. */
-final class Rounds[T](deadlineNs: Long, round: () => Seq[T]) {
+  * the deadline has not passed and fewer than `maxRounds` were handed
+  * out, so a run always ends on whole rounds and every run does the
+  * same mix of work. */
+final class Rounds[T](deadlineNs: Long, maxRounds: Int, round: () => Seq[T]) {
   private val queue = mutable.Queue[T]()
+  private var handed = 0
   def next(): Option[T] = synchronized {
-    if (queue.isEmpty && System.nanoTime() < deadlineNs) queue ++= round()
+    if (queue.isEmpty && handed < maxRounds && System.nanoTime() < deadlineNs) {
+      queue ++= round()
+      handed += 1
+    }
     if (queue.isEmpty) None else Some(queue.dequeue())
   }
 }
@@ -95,10 +100,11 @@ final class Interactive(host: WireHost, runner: WireRunner, seed: Long) {
 
   def clients: Int = math.min(4, Env.cores)
 
-  /** Run whole rounds until `deadlineNs`; returns the ops and connects. */
-  def run(deadlineNs: Long, split: Boolean, pass: Int): (Seq[WireOp], Seq[Connect]) = {
+  /** Run whole rounds until `deadlineNs`, at most `maxRounds`; returns
+    * the ops and connects. */
+  def run(deadlineNs: Long, maxRounds: Int, split: Boolean, pass: Int): (Seq[WireOp], Seq[Connect]) = {
     val rng = new scala.util.Random(seed * 7919 + pass)
-    val rounds = new Rounds[Option[Stmt]](deadlineNs, () => rng.shuffle(
+    val rounds = new Rounds[Option[Stmt]](deadlineNs, maxRounds, () => rng.shuffle(
       Seq.fill(16)(Some(Statements.catalog(rng.nextInt(Statements.catalogCount)))) ++
         Seq.fill(12)(Some(Statements.lookup(rng.nextInt(Statements.lookupCount)))) ++
         analytic.map(Some(_)) ++ Seq.fill(4)(None)))
@@ -161,9 +167,9 @@ final class Interactive(host: WireHost, runner: WireRunner, seed: Long) {
   * (COPY OUT text and binary, two paged binary portals, two full
   * pages, the postgres_scan loop-back). */
 final class Bulk(host: WireHost, runner: WireRunner, seed: Long) {
-  def run(deadlineNs: Long, split: Boolean, pass: Int): (Seq[WireOp], Seq[Connect]) = {
+  def run(deadlineNs: Long, maxRounds: Int, split: Boolean, pass: Int): (Seq[WireOp], Seq[Connect]) = {
     val rng = new scala.util.Random(seed * 7919 + pass)
-    val rounds = new Rounds[Stmt](deadlineNs, () => rng.shuffle(Vector.range(0, 7))
+    val rounds = new Rounds[Stmt](deadlineNs, maxRounds, () => rng.shuffle(Vector.range(0, 7))
       .map(i => Statements.bulk(i + 7 * rng.nextInt(Statements.PoolSize), host.port)))
     val ops = mutable.Buffer[WireOp]()
     val t0 = System.nanoTime()

@@ -2,26 +2,26 @@ package perfbench
 
 import org.apache.spark.sql.SparkSession
 
+import graft.server.PgServer
+
 /** A registry workload over one half of the frozen partition.
   *
   * The half is cut into slices of equal frozen cost, each with one
-  * query from each cost band. Timed: the first slice, a fixed panel, and
-  * then one of the others that the seed picks, about `--seconds` of work
-  * together, each in seeded order, run back to back by one caller after
-  * both warmed up. Every timed answer is checked against its golden.
-  * Over a set of seeds every query of the half is timed and checked; the
-  * panel, the same in every run and run before the slice so the slice
-  * does not leave garbage or cache state behind in it, gives the row and
-  * byte rates, which would otherwise depend on which slice ran. */
+  * query from each cost band. Timed: a fixed panel, the two slices of
+  * middle cost. It warms up on several threads; then one caller runs it
+  * back to back in rounds, each in a fresh seeded order, about `--seconds` of them,
+  * and the rates take each query's median over the rounds. After the
+  * rounds the same caller sweeps one of the other slices, picked by the
+  * seed, once. Every answer is checked against its golden, so a set of
+  * seeds checks every query of the half. The sweep makes no metric:
+  * slices of equal frozen cost took from 3.6 to 7.1 s in a fresh JVM,
+  * and a heavy one slowed the panel queries that ran after it. */
 final class RegistryWorkload(spark: SparkSession, names: Seq[String],
     part: Frozen.Partition, golden: Frozen.Golden, a: Run.Args) extends Workload {
   private val byName = Registry.all.map(q => q.name -> q).toMap
-  private val (panel, slice) =
-    RegistryWorkload.pick(names, n => part.costS.getOrElse(n, 1.0), a.seconds, a.seed)
-  private val timed = {
-    val rng = new scala.util.Random(a.seed)
-    rng.shuffle(panel) ++ rng.shuffle(slice)
-  }
+  private val (panel, sweep) =
+    RegistryWorkload.pick(names, n => part.costS.getOrElse(n, 1.0), a.seed)
+  private val order = new scala.util.Random(a.seed)
   private var tracedRuns = Seq.empty[QueryRun]
   private var tracedLane = Seq.empty[Span]
 
@@ -60,23 +60,33 @@ final class RegistryWorkload(spark: SparkSession, names: Seq[String],
     out.asScala.toSeq
   }
 
-  /** The timed queries once, unmeasured: the first run of a plan pays
-    * code generation, JIT and file-listing caches, which the JVM shares
-    * with the measured pass. */
-  def warmUp(): Unit = concurrently(timed)
+  /** A new session with the engine installed and the fixture views
+    * registered: what a caller of the registry needs first. */
+  def setUp(): Unit = {
+    val s = spark.newSession()
+    graft.Graft.install(s)
+    graft.Tables.registerViews(s, Env.sf("sf0.01"))
+  }
 
+  /** `RegistryWorkload.WarmUps` rounds' worth, spread over the threads. */
+  def warmUp(): Unit = concurrently(Seq.fill(RegistryWorkload.WarmUps)(panel).flatten)
+
+  /** Untraced: `RegistryWorkload.rounds(--seconds)` rounds of the
+    * panel, then the sweep. Traced: one round of the panel. */
   def measure(traced: Option[Trace]): Pass = {
     val trace = traced.getOrElse(new Trace(false))
+    def run(names: Seq[String]) = names.map(n => Registry.run(spark, byName(n), Env.sf("sf0.01"), trace))
     val t0 = System.nanoTime()
-    val runs = timed.map(n => Registry.run(spark, byName(n), Env.sf("sf0.01"), trace))
+    val rounds = if (traced.isEmpty) RegistryWorkload.rounds(a.seconds) else 1
+    val runs = (1 to rounds).flatMap(_ => run(order.shuffle(panel)))
     val wall = System.nanoTime() - t0
+    val swept = if (traced.isEmpty) run(order.shuffle(sweep)) else Nil
     if (traced.nonEmpty) {
       tracedRuns = runs
       tracedLane = trace.all.filter(s => s.layer == "query" && s.parent == 0L)
     }
-    val onPanel = runs.filter(r => panel.contains(r.name))
-    Pass(wall, runs.map(_.name), runs.map(_.totalNs), onPanel.map(_.fp.rows).sum, onPanel.map(_.bytes).sum,
-      onPanel.map(_.totalNs).sum, runs.size, runs.flatMap(verdict))
+    def op(r: QueryRun) = Op(r.name, r.totalNs, r.fp.rows, r.bytes)
+    Pass(wall, runs.map(op), (runs ++ swept).flatMap(verdict), swept.map(op))
   }
 
   def layerMetrics(l: Layers): Unit = l.registry(tracedRuns)
@@ -84,12 +94,28 @@ final class RegistryWorkload(spark: SparkSession, names: Seq[String],
 }
 
 object RegistryWorkload {
-  /** The fixed panel and the seed's slice of `names`, each about
-    * `seconds / 2 / FreshJvmFactor` of frozen cost. */
-  def pick(names: Seq[String], cost: String => Double, seconds: Double,
-      seed: Long): (Seq[String], Seq[String]) = {
-    val all = Registry.slices(names, cost, seconds / 2 / Registry.FreshJvmFactor)
-    (all.head, if (all.size < 2) Nil else all(1 + Math.floorMod(seed, all.size - 1L).toInt))
+  /** Measured rounds for `seconds` of measuring, at the nominal length
+    * of a round on 4 cores, and at least two. The count does not follow
+    * the clock: queries still get faster from round to round, so a run
+    * that fit one more round on a fast moment of a shared host would
+    * read faster still. */
+  def rounds(seconds: Double): Int = math.max(2, math.round(seconds / NominalRoundS).toInt)
+  val NominalRoundS = 7.0
+
+  /** Rounds' worth of warm-up. */
+  val WarmUps = 2
+
+  /** The panel, the two slices of middle frozen cost, and the slice the
+    * seed picks among the others for the sweep. */
+  def pick(names: Seq[String], cost: String => Double, seed: Long): (Seq[String], Seq[String]) = {
+    val all = Registry.slices(names, cost, Registry.SliceCostS)
+    if (all.size < 3) (all.flatten, Nil)
+    else {
+      val byCost = all.indices.sortBy(i => (all(i).map(cost).sum, i))
+      val mid = Set(byCost(all.size / 2 - 1), byCost(all.size / 2))
+      val rest = all.indices.filterNot(mid).map(all)
+      (mid.toSeq.sorted.flatMap(all), rest(Math.floorMod(seed, rest.size.toLong).toInt))
+    }
   }
 }
 
@@ -108,8 +134,20 @@ final class WireWorkload(spark: SparkSession, interactive: Boolean,
 
   def wireHost: Option[WireHost] = Some(host)
 
-  /** One of each statement the mix can send (pool index 0), so each
-    * plan shape is compiled before timing. */
+  /** A new session with the engine installed and the fixture views
+    * registered, a PgServer started on it and one client connected:
+    * what a server pays before its first statement. */
+  def setUp(): Unit = {
+    val s = spark.newSession()
+    graft.Graft.install(s)
+    graft.Tables.registerViews(s, Env.sf("sf0.01"))
+    val server = new PgServer(s, port = 0, password = None, auth = "md5")
+    val port = server.start()
+    try new WireClient(port).close() finally server.stop()
+  }
+
+  /** One of each statement the mix can send, so each plan shape is
+    * compiled before timing. */
   def warmUp(): Unit = {
     val jobs: Seq[WireClient => Unit] =
       if (interactive)
@@ -139,13 +177,18 @@ final class WireWorkload(spark: SparkSession, interactive: Boolean,
     threads.foreach(_.join())
   }
 
+  /** Untraced: whole rounds for `--seconds`. Traced: a fixed amount,
+    * one round of the interactive mix or two of the bulk one, so the
+    * per-layer totals do not depend on how fast the host ran. */
   def measure(traced: Option[Trace]): Pass = {
     val pass = if (traced.isEmpty) 0 else 1
     val t0 = System.nanoTime()
-    val deadline = t0 + (a.seconds * 1e9).toLong
+    val (deadline, maxRounds) =
+      if (traced.isEmpty) (t0 + (a.seconds * 1e9).toLong, Int.MaxValue)
+      else (Long.MaxValue, if (interactive) 1 else 2)
     val (ops, conns) =
-      if (interactive) mix.run(deadline, split = traced.nonEmpty, pass)
-      else bulk.run(deadline, split = traced.nonEmpty, pass)
+      if (interactive) mix.run(deadline, maxRounds, split = traced.nonEmpty, pass)
+      else bulk.run(deadline, maxRounds, split = traced.nonEmpty, pass)
     val wall = (ops.map(_.endNs) ++ conns.map(_.endNs)).max - t0
     traced.foreach { trace =>
       tracedOps = ops
@@ -153,8 +196,8 @@ final class WireWorkload(spark: SparkSession, interactive: Boolean,
       tracedLanes = Layers.wireSpans(trace, ops, conns)
       twinNs = Twin.measure(spark, ops)
     }
-    Pass(wall, ops.map(_.stmt.key), ops.map(_.ns), ops.map(Wire.rowsMoved).sum, ops.map(_.res.bytes).sum,
-      wall, ops.size, ops.filterNot(_.ok).map(o => s"${o.stmt.key}: ${o.why}"))
+    Pass(wall, ops.map(o => Op(o.stmt.template, o.ns, Wire.rowsMoved(o), o.res.bytes)),
+      ops.filterNot(_.ok).map(o => s"${o.stmt.key}: ${o.why}"))
   }
 
   def layerMetrics(l: Layers): Unit = l.wire(tracedOps, tracedConns, twinNs)
